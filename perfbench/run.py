@@ -6,9 +6,9 @@ Run from the root of a checkout. One client runs one operation at a time on
 `local[nproc]` in this process. The run sets up the session `SETUPS` times
 (`get_session` + `register_views`), then runs rounds of the workload's
 operations: the first round is the cold one, and further (warm) rounds run
-until `--seconds` have passed, with at least one warm round. Every operation
-is checked against the golden (row count, hash sum) of the seed's input
-variant; an exception or a mismatch counts as a failed operation.
+until `--seconds` have passed, with at least `MIN_WARM` warm rounds. Every
+operation is checked against the golden (row count, hash sum) of the seed's
+input variant; an exception or a mismatch counts as a failed operation.
 
 The last line of standard output is one JSON object: `correct`, `attempted`,
 `failed` and `metrics`, which holds every `end_to_end` metric of
@@ -33,6 +33,10 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SETUPS = 3
+# JIT compilation and heap sizing go on through the first warm rounds; on
+# text_dedup they take about three of them. The first third of the warm
+# rounds is warm-up, the rest are the steady rounds.
+MIN_WARM = 4
 
 
 def _fail(msg: str) -> int:
@@ -168,16 +172,21 @@ class Runner:
         wl = self.workload(data_dir)
         rounds = []
         t_loop = time.perf_counter()
-        while len(rounds) < 2 or time.perf_counter() - t_loop < seconds:
+        while len(rounds) <= MIN_WARM or time.perf_counter() - t_loop < seconds:
             rounds.append(self.run_round(wl, len(rounds)))
-        # JIT compilation goes on through the first warm rounds: the steady
-        # rounds are the warm rounds after the first third of them
         warm = rounds[1:]
         warm = warm[len(warm) // 3 :]
+        # a steady round's time is the sum of each operation's median over
+        # the steady rounds, so one disturbed operation moves no figure
+        steady_ops = {
+            op: statistics.median(r["ops"][op]["wall_s"] for r in warm)
+            for op in warm[0]["ops"]
+        }
+        steady_s = sum(steady_ops.values())
         e2e = {
             "setup_s": statistics.median(s["setup_s"] for s in self.setups),
             "cold_s": rounds[0]["wall_s"],
-            "items_per_s": statistics.median(wl.items() / r["wall_s"] for r in warm),
+            "items_per_s": wl.items() / steady_s,
         }
         layers = {}
         if self.trace:
@@ -199,6 +208,7 @@ class Runner:
             "steal_frac": self.steal.fraction(),
             "rounds": len(rounds),
             "round_wall_s": [r["wall_s"] for r in rounds],
+            "steady_op_s": steady_ops,
             "items_per_round": wl.items(),
             "item": wl.item,
         }
@@ -368,6 +378,11 @@ def main(argv: list[str]) -> int:
         f"of {s['items_per_round']} {s['item']}: "
         + ", ".join(f"{w:.3f}" for w in s["round_wall_s"])
         + " s",
+        file=sys.stderr,
+    )
+    print(
+        "# steady medians: "
+        + ", ".join(f"{op} {t:.3f} s" for op, t in s["steady_op_s"].items()),
         file=sys.stderr,
     )
     print(
