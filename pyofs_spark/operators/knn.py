@@ -109,6 +109,12 @@ def knn_join(
     STATIONS constant, costs ~0.5 s of createDataFrame+collect per call
     otherwise; guide §5: no driver data work on the query path).
     """
+    inline_rows = strategy == "inline" and points_rows is not None
+    if points is None and not inline_rows:
+        raise ValueError(
+            "knn_join: points=None works only with strategy='inline' and "
+            "points_rows; pass both, or pass a points DataFrame"
+        )
     size = cells.cell_size_deg(res)
     nx = cells.nx(res)
     q = _with_cell_xy(queries, res).select(
@@ -118,7 +124,7 @@ def knn_join(
     # may pass points=None with points_rows instead), so only build the
     # celled points projection for the join-based strategies
     p = None
-    if not (strategy == "inline" and points_rows is not None):
+    if not inline_rows:
         p = _with_cell_xy(points, res).select(
             point_key,
             F.col("lon").alias("_plon"),

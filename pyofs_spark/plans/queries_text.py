@@ -1036,11 +1036,18 @@ register("txt_decontaminate")(_txt_decontaminate)
 # graph, the shape every production web-corpus dedup ends with (C4 /
 # RefinedWeb / Dolma cluster LSH pairs before dropping members).
 #
-# Spark side: operators/components.py — min-label propagation + pointer
-# jumping (Kiveris et al. SoCC'14 family), O(log d) rounds, two id-keyed
-# shuffles per round, lineage cut per round. Edges = the engine's own
-# dedup_minhash_lsh pairs at est_sim >= 0.5; singleton docs keep
-# themselves (component_id = doc_id).
+# Spark side: operators/components.py — contraction, then a local finish.
+# While the quotient graph of distinct label pairs is larger than the
+# driver's edge budget, each round runs min-label propagation + pointer
+# jumping (Kiveris et al. SoCC'14 family) on the cluster, O(log d) rounds,
+# lineage cut per round, and relabels the quotient graph so its internal
+# edges drop out. Once it fits, it is collected once and labelled by a
+# vectorized numpy pass on the driver. The budget is
+# spark.sql.autoBroadcastJoinThreshold at 16 bytes per edge (4 194 304
+# edges at the session's 64 MB): the size the engine already ships to one
+# node; a threshold <= 0 keeps every round on the cluster. Edges = the
+# engine's own dedup_minhash_lsh pairs at est_sim >= 0.5, computed once
+# per call; singleton docs keep themselves (component_id = doc_id).
 #
 # Rows-only + CI-guarded DuckDB parity (tests/test_components.py): the
 # oracle is an independent WITH RECURSIVE reachability closure — a

@@ -9,6 +9,7 @@ Settings chosen for 100 TB scale-out semantics while testing on local[N]:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -75,8 +76,10 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
         ).write.format("noop").mode("overwrite").save()
     except Exception:
         # prewarm is best-effort: a worker-pool hiccup here must never
-        # break session creation
-        pass
+        # break session creation, but it is logged, not swallowed
+        logging.getLogger(__name__).debug(
+            "python worker prewarm failed", exc_info=True
+        )
 
 
 def get_session(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from pyofs_spark.functions import kernels as K
@@ -49,6 +50,19 @@ def test_knn_rings_exact_vs_brute(spark):
     for qid, rows in got_by_q.items():
         rows.sort()
         assert [(pid, d2) for _, pid, d2 in rows] == exp[qid], f"query {qid}"
+
+
+def test_knn_points_none_needs_inline_strategy(spark):
+    """points=None is only valid on the inline path with points_rows; any
+    other strategy must say so instead of failing inside the planner."""
+    qdf = spark.createDataFrame([(1, -122.0, 37.0)], "query_id long, lon double, lat double")
+    rows = [("p0", -122.1, 37.1)]
+    with pytest.raises(ValueError, match="strategy='inline'"):
+        knn_join(qdf, None, k=1, points_rows=rows)
+    with pytest.raises(ValueError, match="points_rows"):
+        knn_join(qdf, None, k=1, strategy="inline")
+    got = knn_join(qdf, None, k=1, strategy="inline", points_rows=rows).collect()
+    assert [(r.query_id, r.point_id, r.knn_rank) for r in got] == [(1, "p0", 1)]
 
 
 def test_nn_regrid_matches_golden_kernel(spark):
