@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..session import install_stat_checked_zipimport
+
 
 def _first_codepoints(sarr):
     """Codepoint of the FIRST character of every string in a StringArray
@@ -92,6 +94,7 @@ def minhash_sigs_arrow(
     schema = "doc_id bigint, " + ", ".join(f"mh{j} bigint" for j in range(n_perm))
 
     def gen(batches):
+        install_stat_checked_zipimport()
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -108,9 +111,11 @@ def minhash_sigs_arrow(
                 yield empty
                 continue
             ids = batch.column(0).to_numpy(zero_copy_only=False)
-            words = pc.split_pattern(
-                pc.fill_null(batch.column(1), ""), " "
-            )
+            # the offsets below are read as int32: a large_string column
+            # (spark.sql.execution.arrow.useLargeVarTypes=true) is cast
+            # down first, and the cast raises if the batch overflows int32
+            text = batch.column(1).cast(pa.string())
+            words = pc.split_pattern(pc.fill_null(text, ""), " ")
             if isinstance(words, pa.ChunkedArray):
                 words = words.combine_chunks()
             flat = words.flatten()
@@ -185,6 +190,7 @@ def shingle_counts_arrow(docs: DataFrame, n: int = 5) -> DataFrame:
     NULL text == empty text."""
 
     def gen(batches):
+        install_stat_checked_zipimport()
         import pyarrow as pa
 
         names = ["doc_id", "shingle", "c"]

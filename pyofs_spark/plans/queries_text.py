@@ -849,16 +849,12 @@ _TXT_CROSSDOC_DUCK = _crossdoc_sql("duck")
 # 2. per_doc is materialized once; the old single-statement form inlined
 #    the whole tokenize+window pipeline TWICE (verified in the executed
 #    plan: two Generate/Window subtrees).
-# 3. Hot-shingle guard (VERDICT r5 #7, guide §2.5 "broadcast-join just
-#    the hot keys"): a viral boilerplate shingle at web scale would pin
-#    df(s) rows of the per_doc side onto one reducer of the doc-frequency
-#    join. df rows with doc_freq >= PYOFS_CROSSDOC_HOT_DF (default 10^6;
-#    a dimension-sized set by construction — at most
-#    total_pairs/threshold entries) join BROADCAST map-side; only the
-#    remaining cold rows — each with bounded fanout — enter the shuffle
-#    join. Every per_doc row matches exactly one df row on exactly one
-#    branch, so the union is a partition of the original join output.
-_CROSSDOC_HOT_DF_DEFAULT = 1_000_000
+# 3. The tail over the materialized per_doc has the oracle's shape: one
+#    GROUP BY shingle doc-frequency aggregate, one join back to per_doc,
+#    one GROUP BY doc_id. df is referenced once: Spark inlines CTEs, so
+#    each further reference would aggregate and shuffle it again. A hot
+#    (boilerplate) shingle's join partition is split by AQE's skew join
+#    (enabled in session.get_session).
 
 _CROSSDOC_PERDOC_SPARK = """
     SELECT doc_id, shingle, count(*) AS c FROM (
@@ -871,47 +867,22 @@ _CROSSDOC_PERDOC_SPARK = """
 """
 
 
-def _crossdoc_tail_sql(hot_df: int) -> str:
+def _crossdoc_tail_sql() -> str:
     return f"""
     WITH df AS (
       SELECT shingle, count(*) AS doc_freq FROM cd_perdoc GROUP BY shingle
-    ),
-    hot AS (SELECT /*+ BROADCAST */ * FROM df WHERE doc_freq >= {hot_df}),
-    j1 AS (
-      SELECT p.doc_id, p.shingle, p.c, h.doc_freq AS hot_freq
-      FROM cd_perdoc p LEFT JOIN hot h ON p.shingle = h.shingle
-    ),
-    joined AS (
-      SELECT doc_id, c, hot_freq AS doc_freq FROM j1 WHERE hot_freq IS NOT NULL
-      UNION ALL
-      SELECT p.doc_id, p.c, d.doc_freq
-      FROM (SELECT doc_id, shingle, c FROM j1 WHERE hot_freq IS NULL) p
-      JOIN (SELECT * FROM df WHERE doc_freq < {hot_df}) d
-        ON p.shingle = d.shingle
     )
-    SELECT doc_id,
-           cast(sum(c) AS bigint) AS n_shingles,
+    SELECT p.doc_id AS doc_id,
+           cast(sum(p.c) AS bigint) AS n_shingles,
            count(*) AS n_distinct_shingles,
-           cast(sum(CASE WHEN doc_freq >= 2 THEN c ELSE 0 END)
+           cast(sum(CASE WHEN d.doc_freq >= 2 THEN p.c ELSE 0 END)
                 AS bigint) AS n_dup_shingles,
-           {round6('sum(CASE WHEN doc_freq >= 2 THEN c ELSE 0 END)'
-                   ' * 1.0e0 / sum(c)')} AS dup_shingle_frac,
-           max(doc_freq) AS max_doc_freq
-    FROM joined
-    GROUP BY doc_id
+           {round6('sum(CASE WHEN d.doc_freq >= 2 THEN p.c ELSE 0 END)'
+                   ' * 1.0e0 / sum(p.c)')} AS dup_shingle_frac,
+           max(d.doc_freq) AS max_doc_freq
+    FROM cd_perdoc p JOIN df d ON p.shingle = d.shingle
+    GROUP BY p.doc_id
     """
-
-
-def _crossdoc_hot_df() -> int:
-    """Hot-shingle broadcast threshold — scale-dependent, so env-tunable
-    (production: size so that threshold x bytes/row stays well under a
-    reducer's task budget; the default 10^6 keeps any cold key's join
-    fanout at ~10^6 rows)."""
-    import os as _os
-
-    return int(
-        _os.environ.get("PYOFS_CROSSDOC_HOT_DF", _CROSSDOC_HOT_DF_DEFAULT)
-    )
 
 
 def _crossdoc_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -942,7 +913,7 @@ _txt_crossdoc_shingles = _df_query_materialized(
     "txt_crossdoc_shingles",
     _crossdoc_pre,
     "cd_perdoc",
-    lambda: _crossdoc_tail_sql(_crossdoc_hot_df()),
+    _crossdoc_tail_sql(),
     oracle=None,
 )
 

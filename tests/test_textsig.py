@@ -83,3 +83,27 @@ def test_shingle_counts_kernel_matches_sql_form(spark):
     sql_form = {tuple(r) for r in spark.sql(_CROSSDOC_PERDOC_SPARK).collect()}
     kernel = {tuple(r) for r in shingle_counts_arrow(docs, n=5).collect()}
     assert kernel == sql_form and len(kernel) > 0
+
+
+def test_kernel_under_large_var_types(spark, sig_frames):
+    """With Arrow large var types on, the kernel's text column arrives as
+    large_string (int64 offsets); it must return the default signatures,
+    never different rows. The plan is built under the conf: a DataFrame
+    keeps the Arrow types it was planned with."""
+    _, kernel = sig_frames
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    default = {tuple(r) for r in kernel.collect()}
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(ADVERSARIAL)], "doc_id long, text string"
+    )
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        large = minhash_sigs_arrow(docs, _PERMS, _MH_PRIME)
+        rows = {tuple(r) for r in large.collect()}
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert rows == default
