@@ -76,18 +76,6 @@ def parent_cell_sql(cell_id_col: str, res: int) -> str:
     )
 
 
-def cell_center_lon_sql(cell_id_col: str, res: int) -> str:
-    n = nx(res)
-    size = cell_size_deg(res)
-    return f"((({cell_id_col} % {n}) + 0.5e0) * {flit(size)} - 180.0e0)"
-
-
-def cell_center_lat_sql(cell_id_col: str, res: int) -> str:
-    n = nx(res)
-    size = cell_size_deg(res)
-    return f"((cast(floor({cell_id_col} / {n}.0e0) as bigint) + 0.5e0) * {flit(size)} - 90.0e0)"
-
-
 def neighbor_offsets(ring: int) -> list[tuple[int, int]]:
     """(dx, dy) offsets of the chebyshev ring at distance `ring` (ring 0 = self)."""
     if ring == 0:
@@ -106,17 +94,3 @@ def disk_offsets(ring: int) -> list[tuple[int, int]]:
     for r in range(ring + 1):
         out.extend(neighbor_offsets(r))
     return out
-
-
-def neighbor_cell_sql(cell_id_col: str, res: int, dx: int, dy: int) -> str:
-    """Neighbor cell id; lon wraps (antimeridian), lat clamps at poles.
-
-    Lon wrap mirrors the reference's antimeridian handling
-    (ref: PyOFS/model/rtofs.py:250-260 two-slice scan;
-    PyOFS/observation/viirs.py:220-241 antimeridian multipolygon split).
-    """
-    n = nx(res)
-    m = ny(res)
-    x = f"((({cell_id_col} % {n}) + {dx} + {n}) % {n})"
-    y = f"least({m - 1}, greatest(0, cast(floor({cell_id_col} / {n}) as bigint) + {dy}))"
-    return f"({y} * {n} + {x})"

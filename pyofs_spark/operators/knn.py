@@ -7,20 +7,29 @@ Reference semantics being generalized:
 - kNN station lookup (north_rule; ref context: station layers
   hf_radar.py:198-252, data_buoy.py:64-71).
 
-Spark-first algorithm (no KD-tree, no driver collect of the big side):
+Strategies (knn_join), one tie-break contract: the k best by (squared-degree
+distance, point_id), point_id compared in its own type, so every strategy
+returns the same rows with the same schema.
 
-1. Index both sides into quad cells at resolution `res` (functions/cells.py).
-2. Pass r = 1, 2, ..., max_ring: for the still-unsettled queries, explode
-   the (2r+1)² cell disk around each query cell, hash-join against the
-   points bucketed by cell, take the k best by (squared-degree distance,
-   point_id) with a window.
-3. A query is SETTLED after pass r iff it found ≥ k candidates and its k-th
-   distance < (r * cell_size)² — any point in an unexplored cell is at least
-   r*cell_size away (chebyshev ring ≥ r+1 ⇒ coordinate gap ≥ r*cell_size),
-   so the answer cannot change. This makes the output EXACTLY equal to the
-   brute-force result, with the deterministic tie-break (d², point_id).
-4. Queries still unsettled after max_ring fall back to a broadcast
-   brute-force join (they are the sparse tail — isolated mid-ocean points).
+- inline: the points are a literal (dist2, idx) struct array in the plan,
+  sorted per query row; ids are sorted in their own type, so idx order is
+  id order. Map only. knn_inline_arrays (the flagship) shares this code.
+- rings: the Spark-first algorithm (no KD-tree, no driver collect of the
+  big side):
+  1. Index both sides into quad cells at resolution `res` (functions/cells.py).
+  2. Pass r = 1, 2, ..., max_ring: for the still-unsettled queries, explode
+     the (2r+1)² cell disk around each query cell, hash-join against the
+     points bucketed by cell, take the k best with a window.
+  3. A query is SETTLED after pass r iff it found ≥ k candidates and its
+     k-th distance < (r * cell_size)² — any point in an unexplored cell is
+     at least r*cell_size away (chebyshev ring ≥ r+1 ⇒ coordinate gap ≥
+     r*cell_size), so the answer cannot change. This makes the output
+     EXACTLY equal to the brute-force result.
+  4. Queries still unsettled after max_ring take the brute-force tail: a
+     cross join to all points plus the same window top-k (they are the
+     sparse tail — isolated mid-ocean points).
+- brute: the rings plan with zero rings, i.e. the tail alone, with the
+  points broadcast.
 
 Scale notes (100 TB): pass 1 dominates and is a single shuffle join keyed by
 cell id; the points side is small (stations/grid) → broadcast; the disk
@@ -32,6 +41,8 @@ operators/skew.py pre-splits hot buckets.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -41,29 +52,51 @@ from ..functions import cells
 from ..functions.sqlgen import flit
 
 
-def _sql_str(s: str) -> str:
-    """Single-quoted SQL string literal."""
-    return "'" + str(s).replace("'", "''") + "'"
+# point id type -> SQL literal for the inline id array. Only these types
+# render as literals; any other id type raises instead of changing the answer.
+_ID_LITERAL = {
+    "string": lambda v: "'" + v.replace("'", "''") + "'",
+    "bigint": lambda v: f"{v}L",
+    "int": str,
+    "double": flit,
+}
+_PY_ID_TYPE = {("str",): "string", ("int",): "bigint", ("float",): "double"}
 
 
-def _inline_topk_sql(
-    rows: list[tuple], k: int, point_key: str, lon_sql: str, lat_sql: str
-) -> str:
-    """topk expression over a literal point list as ONE generated SQL string.
+def _inline_topk(
+    rows: list[tuple], k: int, lon: str, lat: str, id_type: str | None = None
+) -> tuple[str, str]:
+    """The inline top-k over a literal point list [(id, lon, lat), ...] as
+    two SQL strings: `topk`, the k smallest of the sorted (dist2, idx)
+    struct array, and `ids`, the literal array of point ids sorted in their
+    own type, so idx order is id order and struct order (dist2, idx) is the
+    (dist2, point_id) tie-break. `id_type` is the point
+    key's Spark type (simpleString); None derives it from the Python type
+    of the ids (str -> string, int -> bigint, float -> double).
 
-    slice(sort_array(array(named_struct('dist2', ..., '<key>', ...))), 1, k)
-    — identical semantics to the Column-by-Column construction (struct
-    ordering is lexicographic by field: dist2 then point id), but a single
-    F.expr parse instead of ~8 py4j round-trips per point (guide §1/§5:
-    measured 0.85 s of pure driver time per invocation at 13 points)."""
+    sort_array + GetArrayStructFields stay inside whole-stage codegen;
+    array_sort/transform lambdas are CodegenFallback and would interpret
+    per row (verified via explain, PLANS.md). One generated SQL string is
+    one F.expr parse instead of ~8 py4j calls per point (round 6:
+    expression construction was the dominant cost of the flagship plan
+    build at 13 points x 2 builds per bench query)."""
+    if id_type is None:
+        names = tuple(sorted({type(r[0]).__name__ for r in rows}))
+        id_type = _PY_ID_TYPE.get(names, f"Python {list(names)}")
+    render = _ID_LITERAL.get(id_type)
+    nulls = any(r[0] is None for r in rows)
+    if render is None or nulls:
+        what = "a null point id" if nulls else "point ids"
+        raise TypeError(f"knn: cannot inline {what} of type {id_type}")
+    rows_sorted = sorted(rows, key=lambda r: r[0])
     terms = ", ".join(
         "named_struct('dist2', "
-        f"(({lon_sql}) - {flit(px)}) * (({lon_sql}) - {flit(px)})"
-        f" + (({lat_sql}) - {flit(py)}) * (({lat_sql}) - {flit(py)}), "
-        f"{_sql_str(point_key)}, {_sql_str(pid)})"
-        for pid, px, py in rows
+        f"({lon} - {flit(px)}) * ({lon} - {flit(px)})"
+        f" + ({lat} - {flit(py)}) * ({lat} - {flit(py)}), 'idx', {i})"
+        for i, (_, px, py) in enumerate(rows_sorted)
     )
-    return f"slice(sort_array(array({terms})), 1, {k})"
+    ids = ", ".join(render(pid) for pid, _, _ in rows_sorted)
+    return f"slice(sort_array(array({terms})), 1, {k})", f"array({ids})"
 
 
 def _with_cell_xy(df: DataFrame, res: int, lon: str = "lon", lat: str = "lat") -> DataFrame:
@@ -78,60 +111,51 @@ BRUTE_POINTS_THRESHOLD = 20_000  # below this, broadcast brute-force wins
 
 def knn_join(
     queries: DataFrame,
-    points: DataFrame,
+    points: DataFrame | None,
     k: int,
     res: int = 6,
     query_key: str = "query_id",
     point_key: str = "point_id",
     max_ring: int = 4,
-    broadcast_points: bool = True,
     strategy: str = "auto",
     points_rows: list[tuple] | None = None,
 ) -> DataFrame:
     """Exact kNN join: for each query row, the k nearest point rows.
 
     queries: (query_key, lon, lat, ...); points: (point_key, lon, lat, ...).
-    Returns (query cols..., point_key, dist2, knn_rank) with
-    knn_rank ∈ [1, k] ordered by (dist2, point_key).
+    Returns (query_key, point_key, dist2, knn_rank) with knn_rank ∈ [1, k]
+    ordered by (dist2, point_key), point_key compared in its own type. Every
+    strategy returns the same rows with the same schema.
 
     strategy:
-      'brute' — broadcast the points and window over the full cross product.
-                Optimal when the points side is dimension-sized (stations):
-                one map-side join + one window shuffle, no iteration.
-      'rings' — expanding-cell-ring passes (scales to large points sides).
-      'auto'  — count the points side (cheap: it's the small side by
-                contract) and pick. This mirrors Catalyst's broadcast-vs-
-                shuffle decision, which cannot see through the ring loop.
+      'inline' — the points folded into the plan as a literal array: map
+                 only, no shuffle (dimension-sized points such as stations).
+      'brute'  — the rings plan with zero rings: the cross join to the
+                 broadcast points plus a window top-k is the whole plan.
+      'rings'  — expanding-cell-ring passes (scales to large points sides).
+      'auto'   — 'inline' when points_rows is given, else count the points
+                 side (the small side by contract) and pick. This mirrors
+                 Catalyst's broadcast-vs-shuffle decision, which cannot see
+                 through the ring loop.
 
     points_rows: optional pre-collected [(point_id, lon, lat), ...] for the
-    'inline' strategy — skips the per-invocation points.collect() Spark job
-    (a dimension table the caller already holds driver-side, e.g. the
-    STATIONS constant, costs ~0.5 s of createDataFrame+collect per call
-    otherwise; guide §5: no driver data work on the query path).
+    inline strategy; points may then be None. It skips the points.collect()
+    Spark job (a dimension table the caller already holds driver-side, e.g.
+    the STATIONS constant, costs ~0.5 s of createDataFrame+collect per call
+    otherwise; no driver data work on the query path). The id
+    type comes from the points schema when points is given, else from the
+    ids' Python type; ids of another type, or null ids, raise TypeError.
     """
-    inline_rows = strategy == "inline" and points_rows is not None
-    if points is None and not inline_rows:
+    if strategy not in ("auto", "inline", "brute", "rings"):
+        raise ValueError(f"knn_join: unknown strategy {strategy!r}")
+    if points is None and (points_rows is None or strategy in ("brute", "rings")):
         raise ValueError(
-            "knn_join: points=None works only with strategy='inline' and "
-            "points_rows; pass both, or pass a points DataFrame"
+            "knn_join: points=None needs points_rows and strategy 'inline' "
+            "or 'auto'; pass a points DataFrame for 'brute' or 'rings'"
         )
-    size = cells.cell_size_deg(res)
-    nx = cells.nx(res)
-    q = _with_cell_xy(queries, res).select(
-        query_key, F.col("lon").alias("_qlon"), F.col("lat").alias("_qlat"), "_cx", "_cy"
-    )
-    # the inline fast path never touches the points DataFrame (the caller
-    # may pass points=None with points_rows instead), so only build the
-    # celled points projection for the join-based strategies
-    p = None
-    if not inline_rows:
-        p = _with_cell_xy(points, res).select(
-            point_key,
-            F.col("lon").alias("_plon"),
-            F.col("lat").alias("_plat"),
-            (F.col("_cy") * nx + F.col("_cx")).alias("_pcell"),
-        )
-    if strategy == "auto":
+    if strategy == "auto" and points_rows is not None:
+        strategy = "inline"
+    elif strategy == "auto":
         n_points = points.count()
         if n_points <= INLINE_POINTS_THRESHOLD:
             strategy = "inline"
@@ -139,44 +163,41 @@ def knn_join(
             strategy = "brute"
         else:
             strategy = "rings"
-    # The broadcast hint only makes sense for the dimension-sized paths;
-    # 'rings' exists precisely because the points side is too big to
-    # broadcast — hinting it there would push the full table to every
-    # executor (and the driver) in each ring join.
-    if broadcast_points and strategy != "rings" and p is not None:
-        p = F.broadcast(p)
+    q = _with_cell_xy(queries, res).select(
+        query_key, F.col("lon").alias("_qlon"), F.col("lat").alias("_qlat"), "_cx", "_cy"
+    )
     if strategy == "inline":
-        # SHUFFLE-FREE path for dimension-sized points (stations): the point
-        # list is folded into the plan as a literal struct array; per query
-        # row we sort (dist2, point_id) structs and slice the top k. Pure
-        # map → embarrassingly parallel, the optimal plan at any scale when
-        # the dim side is tiny. Struct ordering = lexicographic by field
-        # (dist2 then point_id) — the same deterministic tie-break.
         if points_rows is None:
-            points_rows = [
-                (r[point_key], r["lon"], r["lat"])
-                for r in points.select(point_key, "lon", "lat").collect()
-            ]
-        topk = F.expr(
-            _inline_topk_sql(points_rows, k, point_key, "_qlon", "_qlat")
-        )
-        return q.select(
-            query_key, F.posexplode(topk).alias("_r", "_s")
-        ).select(
+            points_rows = [tuple(r) for r in points.select(point_key, "lon", "lat").collect()]
+        id_type = None if points is None else points.schema[point_key].dataType.simpleString()
+        topk, ids = _inline_topk(points_rows, k, "_qlon", "_qlat", id_type)
+        return q.select(query_key, F.posexplode(F.expr(topk)).alias("_r", "_s")).select(
             query_key,
-            F.col(f"_s.{point_key}").alias(point_key),
+            F.expr(f"element_at({ids}, _s.idx + 1)").alias(point_key),
             F.col("_s.dist2").alias("dist2"),
             (F.col("_r") + 1).alias("knn_rank"),
         )
+
+    size = cells.cell_size_deg(res)
+    nx = cells.nx(res)
+    p = _with_cell_xy(points, res).select(
+        point_key,
+        F.col("lon").alias("_plon"),
+        F.col("lat").alias("_plat"),
+        (F.col("_cy") * nx + F.col("_cx")).alias("_pcell"),
+    )
     if strategy == "brute":
-        win = Window.partitionBy(query_key).orderBy("dist2", point_key)
+        # dimension-sized points: broadcast them. 'rings' exists because the
+        # points side is too big to broadcast, so it gets no hint.
+        p, max_ring = F.broadcast(p), 0
+    win = Window.partitionBy(query_key).orderBy("dist2", point_key)
+
+    def top_k(pairs: DataFrame) -> DataFrame:
+        dist2 = (F.col("_qlon") - F.col("_plon")) * (F.col("_qlon") - F.col("_plon")) + (
+            F.col("_qlat") - F.col("_plat")
+        ) * (F.col("_qlat") - F.col("_plat"))
         return (
-            q.crossJoin(p.drop("_pcell"))
-            .withColumn(
-                "dist2",
-                (F.col("_qlon") - F.col("_plon")) * (F.col("_qlon") - F.col("_plon"))
-                + (F.col("_qlat") - F.col("_plat")) * (F.col("_qlat") - F.col("_plat")),
-            )
+            pairs.withColumn("dist2", dist2)
             .withColumn("knn_rank", F.row_number().over(win))
             .filter(F.col("knn_rank") <= k)
             .select(query_key, point_key, "dist2", "knn_rank")
@@ -184,8 +205,6 @@ def knn_join(
 
     remaining = q
     settled_parts: list[DataFrame] = []
-    win = Window.partitionBy(query_key).orderBy("dist2", point_key)
-
     for ring in range(1, max_ring + 1):
         # truncate lineage so each pass doesn't recompute all prior passes
         remaining = _materialize(remaining)
@@ -199,8 +218,6 @@ def knn_join(
             query_key,
             "_qlon",
             "_qlat",
-            "_cx",
-            "_cy",
             (
                 F.least(
                     F.lit(cells.ny(res) - 1),
@@ -210,16 +227,7 @@ def knn_join(
                 + F.pmod(F.col("_cx") + F.col("_o.dx") + nx, F.lit(nx))
             ).alias("_qcell"),
         ).dropDuplicates([query_key, "_qcell"])
-        cand = cand_cells.join(p, cand_cells["_qcell"] == p["_pcell"], "inner").withColumn(
-            "dist2",
-            (F.col("_qlon") - F.col("_plon")) * (F.col("_qlon") - F.col("_plon"))
-            + (F.col("_qlat") - F.col("_plat")) * (F.col("_qlat") - F.col("_plat")),
-        )
-        topk = (
-            cand.withColumn("knn_rank", F.row_number().over(win))
-            .filter(F.col("knn_rank") <= k)
-            .select(query_key, "_qlon", "_qlat", "_cx", "_cy", point_key, "dist2", "knn_rank")
-        )
+        topk = top_k(cand_cells.join(p, cand_cells["_qcell"] == p["_pcell"], "inner"))
         # settled: k found and k-th distance strictly inside the explored radius
         kth = topk.groupBy(query_key).agg(
             F.count("*").alias("_n"), F.max("dist2").alias("_kth")
@@ -230,74 +238,33 @@ def knn_join(
         )
         settled_parts.append(topk.join(done_keys, query_key, "left_semi"))
         remaining = remaining.join(done_keys, query_key, "left_anti")
-        if ring == max_ring:
-            break
 
-    # brute-force tail: tiny remaining set x all points
-    tail = (
-        remaining.crossJoin(p.drop("_pcell"))
-        .withColumn(
-            "dist2",
-            (F.col("_qlon") - F.col("_plon")) * (F.col("_qlon") - F.col("_plon"))
-            + (F.col("_qlat") - F.col("_plat")) * (F.col("_qlat") - F.col("_plat")),
-        )
-        .withColumn("knn_rank", F.row_number().over(win))
-        .filter(F.col("knn_rank") <= k)
-        .select(query_key, "_qlon", "_qlat", "_cx", "_cy", point_key, "dist2", "knn_rank")
-    )
-    settled_parts.append(tail)
-
-    out = settled_parts[0]
-    for part in settled_parts[1:]:
-        out = out.unionByName(part)
-    return out.select(query_key, point_key, "dist2", "knn_rank")
+    # brute-force tail (the whole plan for 'brute'): remaining x all points
+    settled_parts.append(top_k(remaining.crossJoin(p.drop("_pcell"))))
+    return reduce(DataFrame.unionByName, settled_parts)
 
 
 def knn_inline_arrays(
     df: DataFrame,
-    points_rows: list[tuple[str, float, float]],
+    points_rows: list[tuple],
     k: int,
     lon: str = "lon",
     lat: str = "lat",
     out_prefix: str = "knn",
 ) -> DataFrame:
     """Map-only kNN against a literal point list: appends
-    `{prefix}_stations: array<string>` and `{prefix}_dist2: array<double>`
+    `{prefix}_stations: array<id>` and `{prefix}_dist2: array<double>`
     ordered by (dist2, point_id). Zero shuffle — the scale-optimal plan for
     the flagship pipeline's station lookup."""
     # sort (dist2, idx:int) structs — no string copying inside the sort;
-    # names materialize only for the k winners via a literal-array lookup.
-    # Point ids must be sorted so idx order == id order on distance ties
-    # (keeps the (dist2, point_id) tie-break contract).
-    rows_sorted = sorted(points_rows, key=lambda r: r[0])
-    names_sql = "array({})".format(
-        ", ".join(_sql_str(pid) for pid, _, _ in rows_sorted)
-    )
-    # sort_array (natural struct order = (dist2, idx)) + GetArrayStructFields
-    # keep the whole expression inside whole-stage codegen; array_sort/
-    # transform lambdas are CodegenFallback and would interpret per row
-    # (verified via explain, PLANS.md). The whole thing is ONE generated SQL
-    # string — a single F.expr parse instead of ~8 py4j calls per point
-    # (round 6, guide §1: expression construction was the dominant cost of
-    # the flagship plan build at 13 points x 2 builds per bench query).
-    struct_terms = ", ".join(
-        "named_struct('dist2', "
-        f"({lon} - {flit(px)}) * ({lon} - {flit(px)})"
-        f" + ({lat} - {flit(py)}) * ({lat} - {flit(py)}), 'idx', {i})"
-        for i, (pid, px, py) in enumerate(rows_sorted)
-    )
-    out = df.withColumn(
-        "_topk", F.expr(f"slice(sort_array(array({struct_terms})), 1, {k})")
-    )
-    # idx→name via nested element_at on the literal names array per slot
+    # ids materialize only for the k winners via a literal-array lookup
+    topk, ids = _inline_topk(points_rows, k, lon, lat)
     stations_sql = "array({})".format(
-        ", ".join(
-            f"element_at({names_sql}, element_at(_topk.idx, {s + 1}) + 1)"
-            for s in range(k)
-        )
+        ", ".join(f"element_at({ids}, element_at(_topk.idx, {s + 1}) + 1)" for s in range(k))
     )
     return (
-        out.withColumn(f"{out_prefix}_stations", F.expr(stations_sql))
+        df.withColumn("_topk", F.expr(topk))
+        .withColumn(f"{out_prefix}_stations", F.expr(stations_sql))
         .withColumn(f"{out_prefix}_dist2", F.col("_topk.dist2"))
         .drop("_topk")
     )

@@ -181,7 +181,7 @@ def shingle_counts_arrow(docs: DataFrame, n: int = 5) -> DataFrame:
     the interpreted per-element lambda cost scales with shingle count
     while the kernel's dict-count is native-speed; the Arrow transfer
     parallelizes with the fan-out. The kernel is the default; the HOF SQL
-    (`_CROSSDOC_PERDOC_SPARK`) remains the parity twin.
+    (`tests/sql_twins.CROSSDOC_PERDOC_SPARK`) remains the parity twin.
 
     Semantics bit-identical to that SQL form (pinned in
     tests/test_textsig.py): words = split(text, ' ') KEEPING empty tokens,

@@ -28,7 +28,6 @@ from ..functions import cells, geocode, stations
 from ..operators import knn as knn_op
 from ..operators.pip import pip_fixed
 
-DEFAULT_RES = 6  # 2.8° cells for the station index
 TILE_RES = 8  # 0.70° tiles for the assignment output
 
 
@@ -48,19 +47,12 @@ def assign_cells(df: DataFrame, res: int = TILE_RES) -> DataFrame:
     return df.withColumn("cell_id", F.expr(cells.cell_id_sql("lon", "lat", res)))
 
 
-def station_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        stations.STATIONS, "station_id string, lon double, lat double"
-    )
-
-
 def tile_assignment(
     spark: SparkSession,
     pages: DataFrame,
     key_col: str = "page_id",
     k: int = 3,
     tile_res: int = TILE_RES,
-    knn_res: int = DEFAULT_RES,
     with_knn: bool = True,
 ) -> DataFrame:
     """The flagship query: per page → (cell_id, polygon_id, k nearest stations).

@@ -195,8 +195,8 @@ _STATIONS_VALUES = stations_mod.stations_values_sql()
     """,
 )
 def geo_knn_stations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN station lookup via the expanding-ring join (north_rule);
-    oracle is an independent brute-force window query."""
+    """Exact kNN station lookup (north_rule): the stations are inlined into
+    the plan; oracle is an independent brute-force window query."""
     from ..functions.stations import STATIONS
     from ..operators.knn import knn_join
 
@@ -209,11 +209,9 @@ def geo_knn_stations(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_key="doc_id",
         point_key="station_id",
         max_ring=6,
-        # stations are dimension-sized by contract: name the inline
-        # strategy up front so planning skips the auto-selector's count job,
-        # and hand the driver-side constant list straight to the plan —
-        # no per-invocation createDataFrame+collect job (round 6, guide §5)
-        strategy="inline",
+        # stations are dimension-sized by contract: hand the driver-side
+        # constant list straight to the plan, which makes 'auto' inline —
+        # no count job, no createDataFrame+collect job (round 6)
         points_rows=STATIONS,
     ).select("doc_id", "station_id", "dist2", "knn_rank")
 

@@ -285,12 +285,8 @@ _MH_COLS = ",\n             ".join(
 # shingles = word BIGRAMS (positional lead join): with the tiny synthetic
 # vocabulary, unigram minhash bands collide on almost every doc pair (the
 # LSH candidate set degenerates to all-pairs); bigrams restore realistic
-# shingle cardinality. Positions are engine-specific (posexplode is
-# 0-based, generate_subscripts 1-based — normalized to 1-based here).
-_POS_WORDS_SPARK = (
-    "SELECT doc_id, pos + 1 AS pos, w FROM "
-    "(SELECT doc_id, posexplode(split(text, ' ')) AS (pos, w) FROM documents)"
-)
+# shingle cardinality. Positions are 1-based (generate_subscripts); the
+# Spark twin in tests/sql_twins.py normalizes posexplode's 0-based ones.
 _POS_WORDS_DUCK = (
     "SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos, "
     "unnest(string_split(text, ' ')) AS w FROM documents"
@@ -845,7 +841,8 @@ _TXT_CROSSDOC_DUCK = _crossdoc_sql("duck")
 #    the already-reduced (doc_id, shingle, count) rows. concat_ws over
 #    slice(ws, i, 5) equals concat_ws(word, w1..w4) including empty
 #    tokens; `WHERE w4 IS NOT NULL` equals taking windows i in
-#    [1, size-4].
+#    [1, size-4]. The Arrow kernel in _crossdoc_pre has since replaced
+#    that SQL form, which stays in tests/sql_twins.py as its parity twin.
 # 2. per_doc is materialized once; the old single-statement form inlined
 #    the whole tokenize+window pipeline TWICE (verified in the executed
 #    plan: two Generate/Window subtrees).
@@ -855,16 +852,6 @@ _TXT_CROSSDOC_DUCK = _crossdoc_sql("duck")
 #    each further reference would aggregate and shuffle it again. A hot
 #    (boilerplate) shingle's join partition is split by AQE's skew join
 #    (enabled in session.get_session).
-
-_CROSSDOC_PERDOC_SPARK = """
-    SELECT doc_id, shingle, count(*) AS c FROM (
-      SELECT doc_id, explode(CASE WHEN size(ws) >= 5
-               THEN transform(sequence(1, size(ws) - 4),
-                              i -> concat_ws(' ', slice(ws, i, 5)))
-               ELSE array() END) AS shingle
-      FROM (SELECT doc_id, split(text, ' ') AS ws FROM documents)
-    ) GROUP BY doc_id, shingle
-"""
 
 
 def _crossdoc_tail_sql() -> str:
@@ -887,11 +874,12 @@ def _crossdoc_tail_sql() -> str:
 
 def _crossdoc_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per_doc from the map-only Arrow kernel over the fanned-out scan; the
-    # HOF SQL above (`_CROSSDOC_PERDOC_SPARK`) is the parity twin. The
-    # measured trade (both directions, see shingle_counts_arrow): ~0.4 s
-    # worse at sf0.1 (serial Arrow transfer of the shingle strings), 2.4x
-    # better end-to-end at sf1 and 8.6x per core on the pre — interpreted
-    # per-element lambdas scale with shingle count, the kernel does not.
+    # HOF SQL form (`tests/sql_twins.CROSSDOC_PERDOC_SPARK`) is the parity
+    # twin. The measured trade (both directions, see shingle_counts_arrow):
+    # ~0.4 s worse at sf0.1 (serial Arrow transfer of the shingle strings),
+    # 2.4x better end-to-end at sf1 and 8.6x per core on the pre —
+    # interpreted per-element lambdas scale with shingle count, the kernel
+    # does not.
     import os as _os
 
     from ..operators.textsig import shingle_counts_arrow

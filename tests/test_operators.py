@@ -1,19 +1,20 @@
-"""Operator-level Spark tests: kNN ring path vs brute force, PIP SQL vs
-numpy kernel, NN regrid vs golden kernel, byte identity through the full
-pipeline (SURVEY §5 items 1, 2, 4)."""
+"""Operator-level Spark tests: kNN ring path vs brute force, kNN strategy
+equivalence, PIP SQL vs numpy kernel, NN regrid vs golden kernel, byte
+identity through the full pipeline (SURVEY §5 items 1, 2, 4)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from pyofs_spark.functions import kernels as K
 from pyofs_spark.functions import polygons as P
 from pyofs_spark.operators.knn import knn_join, nn_value_join
 from pyofs_spark.operators.pip import pip_fixed, pip_join_broadcast
-from pyofs_spark.plans.pipeline import geocode_pages, station_df, tile_assignment
+from pyofs_spark.plans.pipeline import geocode_pages, tile_assignment
 from pyofs_spark.synth import synth_pages
 
 
@@ -53,16 +54,90 @@ def test_knn_rings_exact_vs_brute(spark):
 
 
 def test_knn_points_none_needs_inline_strategy(spark):
-    """points=None is only valid on the inline path with points_rows; any
-    other strategy must say so instead of failing inside the planner."""
+    """points=None is only valid with points_rows, which 'auto' turns into
+    the inline path; any other strategy must say so instead of failing
+    inside the planner."""
     qdf = spark.createDataFrame([(1, -122.0, 37.0)], "query_id long, lon double, lat double")
     rows = [("p0", -122.1, 37.1)]
-    with pytest.raises(ValueError, match="strategy='inline'"):
-        knn_join(qdf, None, k=1, points_rows=rows)
-    with pytest.raises(ValueError, match="points_rows"):
-        knn_join(qdf, None, k=1, strategy="inline")
-    got = knn_join(qdf, None, k=1, strategy="inline", points_rows=rows).collect()
-    assert [(r.query_id, r.point_id, r.knn_rank) for r in got] == [(1, "p0", 1)]
+    for strategy in ("auto", "inline"):
+        with pytest.raises(ValueError, match="points_rows"):
+            knn_join(qdf, None, k=1, strategy=strategy)
+    for strategy in ("rings", "brute"):
+        with pytest.raises(ValueError, match="points_rows"):
+            knn_join(qdf, None, k=1, strategy=strategy, points_rows=rows)
+    for strategy in ("auto", "inline"):
+        got = knn_join(qdf, None, k=1, strategy=strategy, points_rows=rows).collect()
+        assert [(r.query_id, r.point_id, r.knn_rank) for r in got] == [(1, "p0", 1)]
+
+
+# query 1 is equidistant (dist2 = 1) from ids 2, 7 and 10, whose order
+# differs between bigint (2 < 7 < 10) and string ('10' < '2' < '7') ids;
+# query 2 ties 3 and 30; query 4 lies beyond max_ring=2 (brute-force tail)
+_TIE_QUERIES = [(1, 0.0, 0.0), (2, 5.0, 5.0), (3, -3.0, 2.0), (4, 150.0, 60.0)]
+_TIE_POINTS = [
+    (2, 1.0, 0.0), (10, 0.0, 1.0), (7, -1.0, 0.0),
+    (3, 5.0, 6.0), (30, 6.0, 5.0), (4, -3.0, 2.5), (99, 100.0, -40.0),
+]
+
+
+@pytest.mark.parametrize("k", [1, 2])
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+@pytest.mark.parametrize("strategy", ["inline", "brute", "rings"])
+def test_knn_strategies_equivalent_on_ties(spark, strategy, id_type, k):
+    """Every kNN strategy is a pure performance choice: the same rows and
+    the same point_id type as pure-python brute force and as 'brute', with
+    (dist2, point_id) ties broken in the id's own type."""
+    cast = str if id_type == "string" else int
+    ps = [(cast(pid), x, y) for pid, x, y in _TIE_POINTS]
+    qdf = spark.createDataFrame(_TIE_QUERIES, "query_id long, lon double, lat double")
+    pdf = spark.createDataFrame(ps, f"point_id {id_type}, lon double, lat double")
+    ref = knn_join(qdf, pdf, k=k, max_ring=2, strategy="brute")
+    exp = _knn_brute_py(_TIE_QUERIES, ps, k)
+    runs = [lambda: knn_join(qdf, pdf, k=k, max_ring=2, strategy=strategy)]
+    if strategy == "inline":  # the id type then comes from the Python ids
+        runs.append(lambda: knn_join(qdf, None, k=k, points_rows=ps))
+    def rows_of(df):  # (query_id, point_id, dist2, knn_rank) by query, rank
+        return sorted(map(tuple, df.collect()), key=lambda r: (r[0], r[3]))
+
+    ref_rows = rows_of(ref)
+    for run in runs:
+        got = run()
+        assert dict(got.dtypes)["point_id"] == dict(ref.dtypes)["point_id"] == id_type
+        rows = rows_of(got)
+        assert rows == ref_rows
+        by_q = {}
+        for qid, pid, d2, _ in rows:
+            by_q.setdefault(qid, []).append((pid, d2))
+        assert by_q == exp
+
+
+def test_knn_inline_rejects_ids_it_cannot_type(spark):
+    """An id the inline literal array cannot carry in its own type raises a
+    TypeError naming the type, never a different answer."""
+    qdf = spark.createDataFrame([(1, 0.0, 0.0)], "query_id long, lon double, lat double")
+    for ids, name in (([None], "NoneType"), ([True], "bool"), ([1, "a"], "int', 'str")):
+        with pytest.raises(TypeError, match=name):
+            knn_join(qdf, None, k=1, points_rows=[(i, 0.0, 0.0) for i in ids])
+    dates = spark.sql("SELECT date'2020-01-01' AS point_id, 0.0D AS lon, 0.0D AS lat")
+    with pytest.raises(TypeError, match="date"):
+        knn_join(qdf, dates, k=1, strategy="inline")
+    nulls = spark.createDataFrame([(None, 0.0, 0.0)], "point_id string, lon double, lat double")
+    with pytest.raises(TypeError, match="null point id"):
+        knn_join(qdf, nulls, k=1, strategy="inline")
+
+
+def test_geo_knn_stations_plan_build_runs_no_job(spark):
+    """Building geo_knn_stations runs no Spark job: its points_rows make
+    'auto' inline, so neither the count nor a points collect runs."""
+    from pyofs_spark.plans.queries import geo_knn_stations, geodocs
+
+    geodocs(spark, SF_DIR)  # warm the memoized table load
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    before = set(tracker.getJobIdsForGroup(group))
+    geo_knn_stations(spark, SF_DIR)
+    assert set(tracker.getJobIdsForGroup(group)) == before
 
 
 def test_nn_regrid_matches_golden_kernel(spark):

@@ -9,12 +9,8 @@ from __future__ import annotations
 import pytest
 
 from pyofs_spark.operators.textsig import minhash_sigs_arrow
-from pyofs_spark.plans.queries_text import (
-    _MH_PRIME,
-    _MINHASH_BODY,
-    _PERMS,
-    _POS_WORDS_SPARK,
-)
+from pyofs_spark.plans.queries_text import _MH_PRIME, _MINHASH_BODY, _PERMS
+from sql_twins import CROSSDOC_PERDOC_SPARK, POS_WORDS_SPARK
 
 ADVERSARIAL = [
     "",
@@ -43,7 +39,7 @@ def sig_frames(spark):
     )
     docs.createOrReplaceTempView("documents")
     sql_form = spark.sql(
-        _MINHASH_BODY.replace("{POSWORDS}", _POS_WORDS_SPARK)
+        _MINHASH_BODY.replace("{POSWORDS}", POS_WORDS_SPARK)
         + "    SELECT * FROM sigs"
     )
     kernel = minhash_sigs_arrow(docs, _PERMS, _MH_PRIME)
@@ -72,7 +68,6 @@ def test_shingle_counts_kernel_matches_sql_form(spark):
     corpus — including empty tokens inside shingles, <5-word drops, and
     unicode."""
     from pyofs_spark.operators.textsig import shingle_counts_arrow
-    from pyofs_spark.plans.queries_text import _CROSSDOC_PERDOC_SPARK
 
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(ADVERSARIAL)]
@@ -80,7 +75,7 @@ def test_shingle_counts_kernel_matches_sql_form(spark):
         "doc_id long, text string",
     )
     docs.createOrReplaceTempView("documents")
-    sql_form = {tuple(r) for r in spark.sql(_CROSSDOC_PERDOC_SPARK).collect()}
+    sql_form = {tuple(r) for r in spark.sql(CROSSDOC_PERDOC_SPARK).collect()}
     kernel = {tuple(r) for r in shingle_counts_arrow(docs, n=5).collect()}
     assert kernel == sql_form and len(kernel) > 0
 

@@ -139,15 +139,12 @@ def test_crossdoc_round6_form_parity_random_corpora(spark, docs):
     """The round-6 Spark restructure (array-built shingles over the word
     array, the doc-frequency tail over a materialized per_doc view) must
     stay value-identical to the DuckDB twin on random corpora."""
-    from pyofs_spark.plans.queries_text import (
-        _CROSSDOC_PERDOC_SPARK,
-        _crossdoc_sql,
-        _crossdoc_tail_sql,
-    )
+    from pyofs_spark.plans.queries_text import _crossdoc_sql, _crossdoc_tail_sql
+    from sql_twins import CROSSDOC_PERDOC_SPARK
 
     # the real query runs the tail over a materialized VIEW; inline the
     # pre as a leading CTE here (the tail's own WITH merges into it)
-    new_spark_sql = f"WITH cd_perdoc AS ({_CROSSDOC_PERDOC_SPARK})" + (
+    new_spark_sql = f"WITH cd_perdoc AS ({CROSSDOC_PERDOC_SPARK})" + (
         _crossdoc_tail_sql().replace("WITH df AS", ", df AS", 1)
     )
     _assert_parity(spark, new_spark_sql, _crossdoc_sql("duck"), docs)
